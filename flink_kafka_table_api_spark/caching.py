@@ -10,13 +10,35 @@ real at scale).
 ``tracked_persist`` registers every such cache; ``release_cached`` frees
 them all. Call sites with a natural query boundary (bench.py per query,
 the driver between correctness checks, a notebook between jobs) call
-``release_cached()`` after the consuming action."""
+``release_cached()`` after the consuming action.
+
+``collect_once`` is the driver-side counterpart for TINY inputs (a query
+vector, a centroid table): their rows are collected once per DataFrame
+object and reused by every later consumer of the same handle."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import weakref
+
+from pyspark.sql import DataFrame, Row
 
 _TRACKED: list[DataFrame] = []
+_COLLECTED: weakref.WeakKeyDictionary[DataFrame, list[Row]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def collect_once(df: DataFrame) -> list[Row]:
+    """``df.collect()``, evaluated at most once per DataFrame object.
+
+    Keyed weakly: the rows live exactly as long as the caller's handle,
+    so nothing outlives it and no release call is needed. The rows are a
+    snapshot — a plan over files that later change must be rebuilt (a
+    new DataFrame object) to be read again."""
+    rows = _COLLECTED.get(df)
+    if rows is None:
+        rows = _COLLECTED[df] = df.collect()
+    return rows
 
 
 def tracked_persist(df: DataFrame) -> DataFrame:

@@ -14,6 +14,9 @@ final guard (see queries.py).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -39,6 +42,43 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; both inputs must already be array<double>."""
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def cosine_lit(a: Column, b: list[float]) -> Column:
+    """:func:`cosine` of an array<double> column against a driver-side
+    vector, passed as an array<double> literal. Catalyst does not
+    constant-fold higher-order functions, so the literal's norm is
+    computed here once (:func:`py_norm`, bit-equal to :func:`norm`)
+    instead of once per row."""
+    return dot(a, F.lit(np.asarray(b, dtype=np.float64))) / (
+        norm(a) * F.lit(py_norm(b))
+    )
+
+
+def py_dot(a: list[float], b: list[float]) -> float:
+    """Driver-side :func:`dot`: the same left-to-right double accumulation
+    as an explicit loop (numpy sums pairwise and ``sum()`` is compensated
+    on Python >= 3.12), so driver and executor results are bit-equal."""
+    acc = 0.0
+    for x, y in zip(a, b, strict=True):
+        acc += x * y
+    return acc
+
+
+def py_norm(a: list[float]) -> float:
+    """Driver-side :func:`norm`, bit-equal to it (see :func:`py_dot`)."""
+    acc = 0.0
+    for x in a:
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def py_cosine(a: list[float], b: list[float]) -> float:
+    """Driver-side :func:`cosine`. A zero-norm side has no direction and
+    scores NaN (the Catalyst expression raises DIVIDE_BY_ZERO under ANSI
+    mode instead)."""
+    den = py_norm(a) * py_norm(b)
+    return py_dot(a, b) / den if den else math.nan
 
 
 def cosine_sql(a: str, b: str) -> str:

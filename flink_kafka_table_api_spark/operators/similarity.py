@@ -20,14 +20,20 @@ Everything is Catalyst higher-order functions on array<float> columns
 from __future__ import annotations
 
 import hashlib
+import math
+from decimal import ROUND_HALF_UP, Decimal
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flink_kafka_table_api_spark.caching import collect_once
 from flink_kafka_table_api_spark.functions.vector import (
     as_double_array,
     cosine,
+    cosine_lit,
     dot,
+    py_cosine,
 )
 
 
@@ -100,6 +106,20 @@ def int8_quantize(vec_col: Column | str) -> Column:
     ).otherwise(F.transform(v, lambda x: F.round(x / scale).cast("long")))
 
 
+def int8_quantize_py(vec: list[float]) -> list[int]:
+    """Driver-side :func:`int8_quantize`, element-equal to it: the same
+    max|x| / 127 scale and Spark's HALF_UP rounding of the exact double
+    (``Decimal``; Python's ``round`` rounds half to even)."""
+    amax = 0.0
+    for x in vec:
+        amax = max(amax, abs(x))
+    scale = amax / 127.0
+    if scale == 0:
+        return [0] * len(vec)
+    return [int(Decimal(x / scale).to_integral_value(ROUND_HALF_UP))
+            for x in vec]
+
+
 def int8_quantize_sql(vec_expr: str) -> str:
     """DuckDB rendering of :func:`int8_quantize`."""
     amax = (f"list_aggregate(list_transform({vec_expr},"
@@ -112,19 +132,33 @@ def int8_quantize_sql(vec_expr: str) -> str:
     )
 
 
-def int_cosine(qa: Column, qb: Column) -> Column:
-    """Cosine over two array<long> quantized vectors: exact integer dot and
-    squared norms, one double division at the end."""
-    idot = F.aggregate(
+def _int_dot(qa: Column, qb: Column) -> Column:
+    return F.aggregate(
         F.zip_with(qa, qb, lambda x, y: x * y),
         F.lit(0).cast("long"), lambda acc, x: acc + x,
     )
-    n2 = lambda q: F.aggregate(  # noqa: E731
-        q, F.lit(0).cast("long"), lambda acc, x: acc + x * x
+
+
+def _int_norm(q: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(q, F.lit(0).cast("long"), lambda acc, x: acc + x * x)
+        .cast("double")
     )
-    return idot.cast("double") / (
-        F.sqrt(n2(qa).cast("double")) * F.sqrt(n2(qb).cast("double"))
-    )
+
+
+def int_cosine(qa: Column, qb: Column) -> Column:
+    """Cosine over two array<long> quantized vectors: exact integer dot and
+    squared norms, one double division at the end."""
+    return _int_dot(qa, qb).cast("double") / (_int_norm(qa) * _int_norm(qb))
+
+
+def int_cosine_lit(qa: Column, qb: list[int]) -> Column:
+    """:func:`int_cosine` against a driver-side quantized vector, passed as
+    an array<long> literal with its norm computed here once (exact integer
+    sum, then the same long->double rounding and sqrt as the executors)."""
+    return _int_dot(qa, F.lit(np.asarray(qb, dtype=np.int64))).cast(
+        "double"
+    ) / (_int_norm(qa) * F.lit(math.sqrt(float(sum(x * x for x in qb)))))
 
 
 def int_cosine_sql(a: str, b: str) -> str:
@@ -382,6 +416,16 @@ def ivf_append(
     )
 
 
+def _query_vector(query: DataFrame, query_vec_col: str) -> list[float] | None:
+    """The one query vector of ``query`` as driver floats (collected once
+    per DataFrame object); None for an empty query. Several rows raise:
+    every IVF request scores exactly one query."""
+    rows = collect_once(query)
+    if len(rows) > 1:
+        raise ValueError(f"IVF query must have one row, got {len(rows)}")
+    return [float(x) for x in rows[0][query_vec_col]] if rows else None
+
+
 def ivf_route(
     centroids: DataFrame,
     query: DataFrame,
@@ -391,21 +435,25 @@ def ivf_route(
 ) -> list[int]:
     """Route a query to its ``nprobe`` nearest centroids — a driver-side
     decision over k rows (the centroid table is tiny by construction).
-    Returning plain ints lets the caller write a LITERAL partition filter,
-    which Catalyst turns into static partition pruning at the scan."""
-    scored = (
-        query.withColumn("__qid", F.lit(0))
-        .crossJoin(F.broadcast(centroids))
-        .withColumn(
-            "__dist",
-            1 - cosine(as_double_array(query_vec_col),
-                       as_double_array("c_embedding")),
-        )
-        .orderBy("__dist", "c_id")
-        .limit(nprobe)
-        .select("c_id")
-    )
-    return [int(r["c_id"]) for r in scored.collect()]
+    Both inputs are collected once per DataFrame object
+    (:func:`caching.collect_once`), so a request against a centroid
+    handle already routed runs one small job for the query and none for
+    the centroids. Distance is 1 - cosine with the executors' exact
+    accumulation order (:func:`py_cosine`), ordered like Spark's
+    ``orderBy(dist, c_id)``: ties go to the lower ``c_id``, NaN (a
+    zero-norm vector) sorts last. Returning plain ints lets the caller
+    write a LITERAL partition filter, which Catalyst turns into static
+    partition pruning at the scan. An empty query routes nowhere ([]); a
+    query with several rows raises ValueError."""
+    q = _query_vector(query, query_vec_col)
+    if q is None:
+        return []
+    scored = []
+    for r in collect_once(centroids):
+        d = 1 - py_cosine(q, [float(x) for x in r["c_embedding"]])
+        nan = math.isnan(d)
+        scored.append((nan, 0.0 if nan else d, int(r["c_id"])))
+    return [c_id for _, _, c_id in sorted(scored)[:nprobe]]
 
 
 def ivf_topk_indexed(
@@ -423,20 +471,24 @@ def ivf_topk_indexed(
     cluster partition(s) (``PartitionFilters: [cluster IN (...)]`` in the
     plan — the scan never reads the other clusters), exact cosine re-rank,
     distributed top-k. nprobe>1 passes several cluster ids; the scan stays
-    pruned, just over nprobe partitions."""
+    pruned, just over nprobe partitions. The query vector (collected once
+    per DataFrame object, so a query already routed costs no job) is an
+    array<double> LITERAL in the scoring projection — no join, no
+    broadcast: collecting the result is one scan job. An empty query
+    yields an empty top-k; a query with several rows raises ValueError."""
     if isinstance(qclusters, int):
         qclusters = [qclusters]
+    q = _query_vector(query, query_vec_col)
     members = spark.read.parquet(index_path).filter(
         F.col("cluster").isin([int(c) for c in qclusters])
     )
+    if q is None:
+        members = members.filter(F.lit(False))
+        score = F.lit(None).cast("double")
+    else:
+        score = cosine_lit(as_double_array(vec_col), q)
     return (
-        members.crossJoin(F.broadcast(query))
-        .withColumn(
-            "cosine_sim",
-            F.round(cosine(as_double_array(vec_col),
-                           as_double_array(query_vec_col)), 6),
-        )
-        .select(id_col, "cosine_sim")
+        members.select(id_col, F.round(score, 6).alias("cosine_sim"))
         .orderBy(F.col("cosine_sim").desc(), F.col(id_col).asc())
         .limit(k)
     )
@@ -455,25 +507,27 @@ def ivf_topk_indexed_quantized(
     """IVF search over the index's MATERIALIZED int8 column: the pruned
     partition scan reads (id, qe) only — never the float vectors — so the
     per-query I/O is nprobe/k of the corpus AND 4x smaller per row. The
-    query vector is quantized once on the broadcast side; scoring is exact
-    integer arithmetic (see :func:`int_cosine`). This composes the two
-    orthogonal scale levers: partition pruning cuts which rows are read,
-    quantization cuts how many bytes each row costs."""
+    query vector is quantized once on the driver
+    (:func:`int8_quantize_py`) and scored as an array<long> literal; the
+    arithmetic is exact integer (see :func:`int_cosine`). This composes
+    the two orthogonal scale levers: partition pruning cuts which rows are
+    read, quantization cuts how many bytes each row costs. Query rows as
+    in :func:`ivf_topk_indexed`."""
     if isinstance(qclusters, int):
         qclusters = [qclusters]
+    q = _query_vector(query, query_vec_col)
     members = (
         spark.read.parquet(index_path)
         .filter(F.col("cluster").isin([int(c) for c in qclusters]))
         .select(F.col(id_col), F.col("qe").cast("array<long>").alias("__qv"))
     )
-    qq = query.select(int8_quantize(query_vec_col).alias("__qq"))
+    if q is None:
+        members = members.filter(F.lit(False))
+        score = F.lit(None).cast("double")
+    else:
+        score = int_cosine_lit(F.col("__qv"), int8_quantize_py(q))
     return (
-        members.crossJoin(F.broadcast(qq))
-        .select(
-            id_col,
-            F.round(int_cosine(F.col("__qv"), F.col("__qq")), 6)
-            .alias("q_cosine_sim"),
-        )
+        members.select(id_col, F.round(score, 6).alias("q_cosine_sim"))
         .orderBy(F.col("q_cosine_sim").desc(), F.col(id_col).asc())
         .limit(k)
     )

@@ -133,13 +133,34 @@ def stream_ann_ingest(
         F.col(centroids.columns[0]).alias("c_id"),
         F.col(centroids.columns[1]).alias("c_embedding"),
     ).persist()
-    cents.count()  # materialize once; every batch broadcasts this
+    try:
+        cents.count()  # materialize once; every batch broadcasts this
+        return _ingest_and_query(
+            spark, vectors_chunked, state_dir, cents, n_chunks=n_chunks,
+            chunk_col=chunk_col, nprobe=nprobe, k=k, query=query,
+        )
+    finally:
+        # the returned plan holds the query as a literal and reads only
+        # index files: routing was the last consumer of the cache
+        cents.unpersist()
+
+
+def _ingest_and_query(
+    spark: SparkSession,
+    vectors_chunked: DataFrame,
+    state_dir: str,
+    cents: DataFrame,
+    *,
+    n_chunks: int,
+    chunk_col: str,
+    nprobe: int,
+    k: int,
+    query: DataFrame | None,
+) -> DataFrame:
     if query is None:
         query = vectors_chunked.filter(F.col("vec_id") == 0).select(
             F.col("embedding").alias("q_embedding")
         )
-    query = query.persist()
-    query.count()
 
     src = stage_chunked_by(
         vectors_chunked, os.path.join(state_dir, "src"),

@@ -69,8 +69,9 @@ SHOWCASE = {
                "touched; ivf_build_index pays the assignment once at ingest "
                "(parquet partitionBy(cluster)), ivf_append maintains it "
                "incrementally, and the query routes driver-side to literal "
-               "cluster ids. At 100 TB each query scans ~nprobe/k of the "
-               "corpus at the file level",
+               "cluster ids and is scored as an array<double> literal — no "
+               "join, no broadcast. At 100 TB each query scans ~nprobe/k of "
+               "the corpus at the file level",
     "json_funcs": "from_json evaluated once per row inside codegen; the "
                    "aggregation shuffles only (k, partial counts)",
     "tpch_q5_local_supplier": "only orders><customer and ><lineitem shuffle; "
@@ -87,7 +88,9 @@ SHOWCASE = {
                             "join reads two pre-pruned slices",
     "ann_ivf_quantized": "pruned index-partition scan whose ReadSchema is "
                          "(vec_id, qe) only — the float embedding column "
-                         "is never read; integer-exact re-rank",
+                         "is never read; the query is quantized on the "
+                         "driver and scored as an array<long> literal (no "
+                         "join, no broadcast); integer-exact re-rank",
     "ann_quantized": "same broadcast + TakeOrderedAndProject plan as the "
                      "exact path, but scoring runs on int8-quantized "
                      "vectors — exact integer accumulation, 4x less "

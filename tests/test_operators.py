@@ -427,6 +427,135 @@ def test_ivf_nprobe_recall_vs_bruteforce(spark, tmp_path):
     assert recalls[8] == 1.0  # probing every cluster IS brute force
 
 
+def _ivf_fixture(spark, sf_dir):
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    centroids = emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_embedding")
+    )
+    return emb, centroids
+
+
+def _route_reference(centroids, query, nprobe):
+    """Spark cross-join routing: the plan ivf_route computes on the driver."""
+    from flink_kafka_table_api_spark.functions.vector import (
+        as_double_array,
+        cosine,
+    )
+
+    dist = 1 - cosine(as_double_array("q_embedding"),
+                      as_double_array("c_embedding"))
+    return [
+        r.c_id for r in query.crossJoin(centroids)
+        .withColumn("dist", dist)
+        .orderBy("dist", "c_id").limit(nprobe).collect()
+    ]
+
+
+def test_ivf_route_matches_spark_cross_join(spark, sf_dir):
+    """Driver-side routing returns exactly the clusters (and order) that a
+    Spark cross-join + orderBy(dist, c_id) returns."""
+    emb, centroids = _ivf_fixture(spark, sf_dir)
+    for vec_id in (0, 3, 40, 123):
+        query = emb.filter(F.col("vec_id") == vec_id).select(
+            F.col("embedding").alias("q_embedding")
+        )
+        for nprobe in (1, 2, 8):
+            assert sim.ivf_route(centroids, query, nprobe=nprobe) == \
+                _route_reference(centroids, query, nprobe), (vec_id, nprobe)
+
+
+def test_ivf_route_ties_nan_and_query_rows(spark):
+    """Equal distances go to the lower c_id; a zero query (NaN distances)
+    orders by c_id; an empty query routes nowhere; two rows raise."""
+    cents = spark.createDataFrame(
+        [(7, [0.0, 1.0]), (5, [1.0, 0.5]), (2, [1.0, 0.5]), (9, [-1.0, 0.0])],
+        "c_id int, c_embedding array<double>",
+    )
+    q = spark.createDataFrame([([1.0, 0.4],)], "q_embedding array<double>")
+    assert sim.ivf_route(cents, q, nprobe=3) == [2, 5, 7]
+    assert sim.ivf_route(cents, q, nprobe=3) == _route_reference(cents, q, 3)
+
+    zero = spark.createDataFrame([([0.0, 0.0],)], "q_embedding array<double>")
+    assert sim.ivf_route(cents, zero, nprobe=4) == [2, 5, 7, 9]
+
+    empty = q.filter(F.lit(False))
+    assert sim.ivf_route(cents, empty, nprobe=2) == []
+
+    two = spark.createDataFrame(
+        [([1.0, 0.0],), ([0.0, 1.0],)], "q_embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="one row"):
+        sim.ivf_route(cents, two, nprobe=1)
+
+
+def test_ivf_request_shape(spark, sf_dir, tmp_path):
+    """One request against an already-routed centroid handle: route +
+    collect top-k run at most 3 jobs (query collect, index schema
+    inference, the scan), the top-k plan scores a literal (no broadcast)
+    over a cluster-pruned scan, an empty query gives an empty top-k, and
+    the memo drops its entries with the caller's handles."""
+    import gc
+    import weakref
+
+    from flink_kafka_table_api_spark import caching
+
+    emb, centroids = _ivf_fixture(spark, sf_dir)
+    path = str(tmp_path / "ivf_shape")
+    sim.ivf_build_index(emb, centroids, path)
+    vecs = [[float(x) for x in r.embedding]
+            for r in emb.filter(F.col("vec_id").isin(5, 6)).collect()]
+    sim.ivf_route(
+        centroids,
+        spark.createDataFrame([(vecs[0],)], "q_embedding array<double>"),
+    )
+
+    q = spark.createDataFrame([(vecs[1],)], "q_embedding array<double>")
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_request_shape", "one IVF request")
+    try:
+        qc = sim.ivf_route(centroids, q, nprobe=2)
+        top = sim.ivf_topk_indexed(spark, path, qc, q, 10)
+        assert len(top.collect()) == 10
+        jobs = sc.statusTracker().getJobIdsForGroup("ivf_request_shape")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(jobs) <= 3
+
+    plan = top._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" not in plan and "NestedLoopJoin" not in plan
+    assert "cluster" in plan.split("PartitionFilters:")[1][:200]
+
+    assert sim.ivf_topk_indexed(spark, path, qc, q.filter(F.lit(False)),
+                                10).collect() == []
+
+    refs = [weakref.ref(q), weakref.ref(centroids)]
+    assert all(r() in caching._COLLECTED for r in refs)
+    n = len(caching._COLLECTED)
+    del q, centroids, top
+    gc.collect()
+    assert all(r() is None for r in refs)
+    assert len(caching._COLLECTED) <= n - 2
+
+
+def test_int8_quantize_py_matches_int8_quantize(spark, sf_dir):
+    """The driver-side quantizer feeding ivf_topk_indexed_quantized's
+    literal is element-equal to the Catalyst one, half-way values
+    included (HALF_UP, not Python's half-to-even round)."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    halves = spark.createDataFrame(
+        [(-1, [127.0, 0.5, 1.5, 2.5, -2.5, 63.5]), (-2, [0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    for df in (emb, halves):
+        for r in df.select(
+            "embedding", sim.int8_quantize("embedding").alias("q")
+        ).collect():
+            assert sim.int8_quantize_py(
+                [float(x) for x in r.embedding]) == list(r.q)
+    assert sim.int8_quantize_py([127.0, 0.5, 1.5, 2.5, -2.5, 63.5]) == \
+        [127, 1, 2, 3, -3, 64]
+
+
 def test_quantized_topk_recall_and_exact_integer_scores(spark):
     """Int8-quantized top-k: (1) recall vs the exact float ranking clears a
     floor on the fixture corpus (quantization is lossy but mild at 64 dims);
